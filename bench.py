@@ -287,10 +287,11 @@ def main() -> None:
     # capture truncated the (growing) single JSON line two rounds in a
     # row (BENCH_r09/r10 `parsed: null`), nulling the round-over-round
     # comparison.  The stdout line now carries only the contract keys +
-    # the two fixed-size calibration fields; `volatile_reps` (raw reps
+    # the two fixed-size calibration fields.  `volatile_reps` (raw reps
     # behind the medianed VOLATILE_QUERIES rows, unbounded as the set
-    # grows) moves to its own stderr JSON line, still captured by any
-    # harness that keeps stderr (round-12 verdict task #2).
+    # grows) goes to the side file bench_side.json in the working
+    # directory, so a merged stdout+stderr capture holds exactly one
+    # JSON line.
     print(
         json.dumps(
             {
@@ -311,11 +312,8 @@ def main() -> None:
             }
         )
     )
-    print(
-        json.dumps({"volatile_reps": volatile_reps}),
-        file=sys.stderr,
-        flush=True,
-    )
+    with open("bench_side.json", "w") as f:
+        json.dump({"volatile_reps": volatile_reps}, f)
 
 
 if __name__ == "__main__":

@@ -13,9 +13,11 @@ Mirrors ``dystonse-gtfs-data {import|analyse|predict|monitor}``
 ``monitor`` prints JSON lines by default; ``monitor --serve`` starts
 the reference's HTTP mode (src/monitor/mod.rs:102-190) via
 monitor_http.py — /autocomplete, /stop-by-name, /departures served
-from the same operators.  ``import`` here is
-the reference's batch mode; the streaming path (automatic mode) lives
-in streaming/pipeline.start_records_stream and is exercised by tests.
+from the same operators.  ``import`` is the reference's batch mode;
+``import --automatic`` is its automatic mode, run as the streaming
+path (streaming/pipeline.start_records_stream) drained with
+availableNow.  Both merge into the records table on
+``schemas.RECORDS_KEY``.
 
 Usage examples:
     python -m dystonse_gtfs_data_spark --dir data --source vbn import
@@ -47,12 +49,6 @@ def _schedule_path(args) -> str:
     return candidates[-1]  # newest by name (date-stamped filenames)
 
 
-_RECORDS_KEY = [
-    "source", "route_id", "trip_id", "trip_start_date",
-    "trip_start_time", "stop_sequence",
-]
-
-
 def _merge_into_records(spark, records, records_path: str) -> None:
     """Latest-wins merge of ``records`` into the parquet table via a
     staging write + atomic rename (the MERGE the reference does row-wise
@@ -67,6 +63,7 @@ def _merge_into_records(spark, records, records_path: str) -> None:
     import shutil
 
     from .operators.records import merge_records
+    from .schemas import RECORDS_KEY
 
     target_file_bytes = 128 * 1024 * 1024
     old = records_path + ".old"
@@ -79,7 +76,7 @@ def _merge_into_records(spark, records, records_path: str) -> None:
         os.rename(old, records_path)
     if os.path.exists(records_path):
         existing = spark.read.parquet(records_path)
-        merged = merge_records(existing, records, key=_RECORDS_KEY)
+        merged = merge_records(existing, records, key=RECORDS_KEY)
         total = sum(
             os.path.getsize(os.path.join(r, n))
             for r, _d, names in os.walk(records_path)
@@ -93,8 +90,8 @@ def _merge_into_records(spark, records, records_path: str) -> None:
     tmp = records_path + ".staging"
     shutil.rmtree(tmp, ignore_errors=True)  # stale staging from a crash
     (
-        merged.repartitionByRange(n_files, *_RECORDS_KEY)
-        .sortWithinPartitions(*_RECORDS_KEY)
+        merged.repartitionByRange(n_files, *RECORDS_KEY)
+        .sortWithinPartitions(*RECORDS_KEY)
         .write.mode("overwrite")
         .parquet(tmp)
     )

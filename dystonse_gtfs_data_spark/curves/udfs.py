@@ -56,12 +56,6 @@ def curve_x_at_y(curve: pd.Series, y: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.DoubleType())
-def curve_y_at_x(curve: pd.Series, x: pd.Series) -> pd.Series:
-    """CDF value at x (C11)."""
-    return _eval_series(curve, x, lambda c, a: float(c.y_at_x(float(a))))
-
-
-@F.pandas_udf(T.DoubleType())
 def curve_min_x(curve: pd.Series) -> pd.Series:
     return _eval_series(curve, pd.Series([0.0] * len(curve)), lambda c, _a: c.min_x())
 

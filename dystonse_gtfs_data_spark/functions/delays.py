@@ -22,10 +22,6 @@ def count_valid(delay: Column) -> Column:
     return delay.between(-COUNT_DELAY_BOUND, COUNT_DELAY_BOUND)
 
 
-def curve_valid(delay: Column) -> Column:
-    return (delay > -CURVE_DELAY_BOUND) & (delay < CURVE_DELAY_BOUND)
-
-
 def round_toward_zero(delay: Column, step: int = DELAY_ROUND_STEP) -> Column:
     """Truncate-toward-zero to a multiple of ``step``: sign(d) * floor(|d|/step) * step."""
     d = delay.cast("long")

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import tracked_persist
 from ..curves.core import Curve, average_curves, make_curve, simplify
 from ..curves.udfs import curve_to_rows, rows_to_curve
 from ..functions.route import route_section
@@ -148,7 +149,7 @@ def default_statistics(enriched: DataFrame, routes: DataFrame) -> DataFrame:
     """The full rollup + gap fill → DELAY_CURVES-shaped rows
     (scope 'default', every grid key populated)."""
     spark = enriched.sparkSession
-    variant_curves = variant_section_curves(enriched, routes).cache()
+    variant_curves = tracked_persist(variant_section_curves(enriched, routes))
 
     level1 = variant_curves.groupBy(
         "route_type", "route_section", "time_slot_id", "event_type"

@@ -331,52 +331,6 @@ def sample_video_frames(
     return assets.mapInPandas(run, out_schema)
 
 
-# Catalyst reports defaultSizeInBytes (Long.MaxValue) for non-file-backed
-# plans and join-multiplied products far beyond any real table; estimates in
-# that territory are garbage, not data.
-_SUSPECT_SIZE_BYTES = 1 << 60
-
-
-def with_binary_partitioning(
-    assets: DataFrame,
-    target_rows_per_partition: int = 1024,
-    expected_rows: int | None = None,
-) -> DataFrame:
-    """Repartition a binary-asset table so each Arrow batch holds a
-    bounded number of blobs — the knob that keeps executor memory flat
-    when blobs are MBs (100 TB path: size partitions by bytes, not rows).
-
-    Partition count comes from ``expected_rows`` (caller-known cardinality)
-    or, for parquet-backed frames, Catalyst's row-count statistics.  A
-    byte-size estimate is only trusted when it is plausibly file-backed
-    (< 2^60) and the derived partition count is clamped to a small multiple
-    of the cluster parallelism; otherwise we pay one exact ``.count()`` —
-    an extra scan beats a repartition(2 billion)."""
-    n: int | None = None
-    if expected_rows is not None:
-        n = max(1, expected_rows // target_rows_per_partition)
-    else:
-        try:
-            stats = assets._jdf.queryExecution().optimizedPlan().stats()
-            row_stat = stats.rowCount()
-            if row_stat.isDefined():
-                n = max(1, int(str(row_stat.get())) // target_rows_per_partition)
-            else:
-                size = int(str(stats.sizeInBytes()))
-                if 0 < size < _SUSPECT_SIZE_BYTES:
-                    # assume ~1 MiB blobs: conservative (over-partitioning is
-                    # cheap, OOM is not) — but clamped, because a size-only
-                    # guess is an order-of-magnitude estimate at best
-                    n = max(1, (size // (1 << 20)) // target_rows_per_partition)
-                    cap = assets.sparkSession.sparkContext.defaultParallelism * 32
-                    n = min(n, max(1, cap))
-        except Exception:
-            n = None
-        if n is None:
-            n = max(1, assets.count() // target_rows_per_partition)
-    return assets.repartition(n, "asset_id")
-
-
 # ---------------------------------------------------------------------------
 # Synthetic assets: deterministic blobs for driver-gated correctness
 # ---------------------------------------------------------------------------

@@ -289,13 +289,6 @@ def deterministic_reservoir(
     )
 
 
-def reservoir_hash_sql(id_expr: str) -> str:
-    """DuckDB twin of the reservoir's salted rank hash."""
-    return portable_base_hash_sql(
-        f"substr(md5('rsv:' || CAST({id_expr} AS VARCHAR)), 1, 15)"
-    )
-
-
 #: weighted_sample ranks rows by the TOP 40 bits of the 60-bit fold:
 #: 2^-40 keep-probability resolution is ample, and the smaller operand
 #: keeps every decimal128 product exact up to W_total ≈ 10^25 (the full

@@ -35,12 +35,6 @@ def _norm(a):
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
-    )
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -148,21 +142,6 @@ def lsh_bucket_table_udf_int(all_planes: list[list[list[int]]]):
         return pd.Series(list(out))
 
     return buckets
-
-
-def lsh_bucket(vec, planes: list[list[float]]):
-    """Sign-bucket id from random hyperplanes, as one JVM-side expression.
-    (Kept for single-table uses; multi-table pipelines use
-    :func:`lsh_bucket_table_udf` — the nested fold expressions here fall
-    back to interpreted evaluation, which dominates wall time when
-    every corpus row computes tables × planes of them.)"""
-    bits = []
-    for i, p in enumerate(planes):
-        # one array literal per plane (not dim F.lit py4j calls — the
-        # round-11 literal-matrix lesson from pca.jl_project)
-        arr = lit_doubles(p)
-        bits.append(F.when(_dot(vec, arr) >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0])
 
 
 def lsh_bucket_table_udf(all_planes: list[list[list[float]]]):

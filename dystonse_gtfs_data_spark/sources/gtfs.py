@@ -95,10 +95,3 @@ def derive_route_variants(trips: DataFrame, stop_times: DataFrame) -> DataFrame:
         .drop("pattern_hash")
     )
 
-
-def write_gtfs_parquet(tables: dict[str, DataFrame], out_dir: str) -> None:
-    """Persist a feed as parquet (the cluster-side cached form; replaces
-    the reference's mtime-keyed schedule cache, src/main.rs:321-393 —
-    parquet + catalog metadata make the cache free)."""
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))

@@ -49,3 +49,30 @@ def test_bigram_c2_persist_is_tracked_and_released(spark, sf_dir):
     finally:
         n = cache.release_persisted()
     assert n >= 1
+
+
+def test_default_statistics_persist_is_tracked_and_released(spark):
+    # default_statistics persists the per-variant curve table its three
+    # rollup levels share.  Like the c2 table above, that persist must be
+    # REGISTERED, or it outlives release_persisted() and later queries
+    # read a predecessor's cache.
+    from dystonse_gtfs_data_spark.operators.default_curves import (
+        default_statistics,
+    )
+    from dystonse_gtfs_data_spark.operators.specific_curves import (
+        enrich_records,
+        stop_indexed,
+    )
+    from dystonse_gtfs_data_spark.sources.demo import build_records, build_schedule
+
+    cache.release_persisted()  # count only what this test persists
+    try:
+        sched = build_schedule(spark)
+        enriched = enrich_records(
+            build_records(spark), stop_indexed(sched["stop_times"])
+        )
+        out = default_statistics(enriched, sched["routes"])
+        assert out.count() > 0  # materialize the per-variant cache
+    finally:
+        n = cache.release_persisted()
+    assert n >= 1

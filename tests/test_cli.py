@@ -210,11 +210,12 @@ def test_merge_into_records_recovers_from_rename_crash(spark, tmp_path):
     def batch(ids, t):
         return spark.createDataFrame(
             [
-                ("src", "r1", f"t{i}", dt.date(2024, 1, 1), 100, i,
+                ("src", "r1", 7, f"t{i}", dt.date(2024, 1, 1), 100, i,
                  dt.datetime(2024, 1, 1, 8, 0, t), float(i))
                 for i in ids
             ],
-            "source string, route_id string, trip_id string, "
+            "source string, route_id string, route_variant long, "
+            "trip_id string, "
             "trip_start_date date, trip_start_time int, stop_sequence int, "
             "time_of_recording timestamp, delay_departure double",
         )

@@ -64,3 +64,17 @@ def test_every_query_has_an_oracle():
     assert sorted(set(Q.REGISTRY) - set(ORACLE_QUERIES)) == sorted(
         ROWS_ONLY_BY_DESIGN
     )
+
+
+def test_register_rejects_duplicate_and_missing_oracle(monkeypatch):
+    # each catalog entry is declared once, oracle included: a second
+    # declaration must raise instead of silently replacing the first,
+    # and an entry without oracle SQL must not register at all
+    monkeypatch.setattr(Q, "REGISTRY", dict(Q.REGISTRY))
+    spec = Q.REGISTRY["pricing_summary"]
+    with pytest.raises(ValueError, match="declared twice"):
+        Q.register("pricing_summary", "SELECT 1")(lambda spark, sf_dir: None)
+    assert Q.REGISTRY["pricing_summary"] is spec
+    with pytest.raises(ValueError, match="no oracle"):
+        Q.register("no_oracle_entry", None)(spec.fn)
+    assert "no_oracle_entry" not in Q.REGISTRY

@@ -31,8 +31,9 @@ grep -q "^0 failures" "$out_dir/correctness.txt" \
   || { echo "GATE FAIL: correctness"; exit 1; }
 
 echo "=== gate 3/4: bench ($BENCH_SF_DIR) ==="
-SPARK_GRAFT_SF_DIR="$BENCH_SF_DIR" python bench.py 2>/dev/null \
+SPARK_GRAFT_SF_DIR="$BENCH_SF_DIR" python bench.py 2>"$out_dir/bench.stderr" \
   | tail -1 | tee "$out_dir/bench.json"
+cp bench_side.json "$out_dir/" 2>/dev/null  # volatile_reps side file
 python -c "import json,sys; json.load(open('$out_dir/bench.json'))" \
   || { echo "GATE FAIL: bench emitted no JSON"; exit 1; }
 
